@@ -85,7 +85,11 @@ def load_spread(
     batches instead of ``defaultParallelism`` tiny Python tasks, while a
     large one keeps every core (the clamp only ever shrinks, and an
     unknown row count keeps the full spread).  Scale-adaptive by
-    construction — never a local[32] constant."""
+    construction — never a local[32] constant.  Each Python task still
+    pays a fixed worker round trip (a 500-row identity ``mapInArrow``
+    takes ~0.1 s more than the same JVM-only query on local[2]); the larger
+    per-task re-read of ``pyspark.zip`` is gone under local masters
+    (``pyworker_daemon``)."""
     df = load(spark, name, sf_dir)
     n = spark.sparkContext.defaultParallelism
     if min_rows > 1:
@@ -96,16 +100,31 @@ def load_spread(
 
 
 def small_df(spark: SparkSession, rows: list, schema) -> DataFrame:
-    """A literal DataFrame in ONE slice (r16 optimization round, guide
-    §2.2): ``createDataFrame`` parallelizes local data into
-    ``defaultParallelism`` slices, so every tiny literal frame (a k-row
-    centroid table, a bounded probe batch) scheduled 32 near-empty tasks
-    EACH NEEDING A PYTHON WORKER on local[32] — measured ~6 s of summed
-    task time per 16-row frame, and a broadcast-build pipeline over one
-    dropped from 0.59 s to 0.29 s when the frame is a single slice.
-    Callers pass only constant-bounded row sets (the bounded-collect
-    contract), so one slice is the right width at any scale."""
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    """A literal DataFrame as a driver-side ``LocalRelation``: no job and
+    no Python-worker task. ``createDataFrame(list)`` and
+    ``createDataFrame(parallelize(rows, 1))`` both ship the rows to a
+    Python worker in a task (~0.15 s per frame on a warm local[2] session
+    under ``pyworker_daemon``, 0.35-0.42 s under the stock daemon); an
+    Arrow table becomes a ``LocalRelation`` in 0.04-0.06 s.
+
+    ``schema`` is a DDL string or ``StructType``. Values go through the
+    schema's own ``toInternal`` in the driver, as ``createDataFrame(list)``
+    does: dates become epoch days and a naive ``datetime`` reads in the
+    driver's local zone (the RDD path read it in the worker's, which local
+    workers inherit from the driver at launch). Callers pass only
+    constant-bounded row sets (the bounded-collect contract): the frame
+    lives in the plan."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow = to_arrow_schema(struct)
+    cols = zip(*(struct.toInternal(r) for r in rows)) if rows else ([] for _ in arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def parquet_row_count(name: str, sf_dir: str | None = None) -> int:

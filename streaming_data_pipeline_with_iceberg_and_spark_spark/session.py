@@ -14,6 +14,9 @@ cluster-ready configuration surface:
   classpath (this container ships none); otherwise the engine's table layer
   (``sources.tables``) falls back to a parquet warehouse with the same
   append/overwrite semantics.
+- Local masters run Python workers under ``pyworker_daemon``, which skips
+  the per-task re-read of the unchanged ``pyspark.zip`` (see
+  ``local_worker_conf``).
 """
 
 from __future__ import annotations
@@ -24,6 +27,30 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_DAEMON_MODULE = f"{__package__}.pyworker_daemon"
+_WORKER_PATH_KEY = "spark.executorEnv.PYTHONPATH"
+
+
+def local_worker_conf(master: str, conf: dict[str, str]) -> dict[str, str]:
+    """``conf`` plus the Python-worker daemon settings for ``master``.
+
+    A local master (``local``, ``local[...]``) gets ``pyworker_daemon`` as
+    ``spark.python.daemon.module`` and the package's parent directory
+    appended to ``spark.executorEnv.PYTHONPATH`` (an existing value is kept
+    in front), so the daemon imports from any working directory. A daemon
+    module already in ``conf`` wins. Any other master keeps the stock
+    daemon: on a cluster a package shipped with ``--py-files`` is not on
+    the daemon's path."""
+    if master != "local" and not master.startswith("local["):
+        return dict(conf)
+    path = conf.get(_WORKER_PATH_KEY)
+    return {
+        "spark.python.daemon.module": _DAEMON_MODULE,
+        **conf,
+        _WORKER_PATH_KEY: os.pathsep.join(p for p in (path, _PACKAGE_ROOT) if p),
+    }
 
 
 def iceberg_runtime_available() -> bool:
@@ -106,6 +133,6 @@ def get_spark(
             .config("spark.sql.catalog.local.type", "hadoop")
             .config("spark.sql.catalog.local.warehouse", wh)
         )
-    for k, v in (extra_conf or {}).items():
+    for k, v in local_worker_conf(master, extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

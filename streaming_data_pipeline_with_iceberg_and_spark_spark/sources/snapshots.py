@@ -84,6 +84,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io import small_df
+
 
 class SnapshotError(Exception):
     pass
@@ -1551,8 +1553,8 @@ class SnapshotTable:
             )
             for f in self._expand_files(snap["dirs"])
         ]
-        return self.spark.createDataFrame(
-            rows, "file_path string, row_count long, file_bytes long"
+        return small_df(
+            self.spark, rows, "file_path string, row_count long, file_bytes long"
         )
 
     def read_as_of(self, ts: float) -> DataFrame:
@@ -1570,8 +1572,10 @@ class SnapshotTable:
             (s["id"], s["op"], len(s["dirs"]), float(s["ts"]), bool(s.get("expired")))
             for s in self._log()
         ]
-        return self.spark.createDataFrame(
-            rows, "version long, op string, n_dirs int, committed_at double, expired boolean"
+        return small_df(
+            self.spark,
+            rows,
+            "version long, op string, n_dirs int, committed_at double, expired boolean",
         )
 
     # -- copy-on-write mutations (file-granularity, manifest-pruned) -------
@@ -2241,8 +2245,8 @@ class SnapshotTable:
                     with open(os.path.join(meta_dir, fn)) as f:
                         blog = json.load(f)
                     rows.append((bname, "branch", blog[-1]["id"] if blog else 0))
-        return self.spark.createDataFrame(
-            rows, "ref_name string, ref_type string, version long"
+        return small_df(
+            self.spark, rows, "ref_name string, ref_type string, version long"
         )
 
     def partitions(self, version: int | None = None) -> DataFrame:
@@ -2289,7 +2293,8 @@ class SnapshotTable:
             )
             for k, c in sorted(agg.items(), key=lambda kv: (kv[0] is None, kv[0]))
         ]
-        return self.spark.createDataFrame(
+        return small_df(
+            self.spark,
             rows,
             "partition array<string>, exact boolean, file_count long, "
             "row_count long, total_bytes long",

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..io import small_df
 from ..sources.ndjson import read_stream
 from ..sources.tables import Warehouse
 
@@ -140,7 +141,7 @@ def start_rollup_ingest(
             )
         else:
             warehouse.write(partial, table, mode="overwrite")
-        log_row = spark.createDataFrame([(batch_id,)], "batch_id long")
+        log_row = small_df(spark, [(batch_id,)], "batch_id long")
         warehouse.write(log_row, log_table, mode="append")
 
     writer = parsed.writeStream.foreachBatch(rollup_batch).outputMode("update")
